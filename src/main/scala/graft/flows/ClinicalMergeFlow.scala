@@ -48,15 +48,22 @@ object ClinicalMergeFlow {
   /** A5c (mci:263-279): merge new clinical rows into the cumulative
     * megaMAF, dedup on the variant key keeping clinical rows first
     * ('Not Reported'/null significance sorts last), then the
-    * presentation sort (mci:282). */
+    * presentation sort (mci:282). Rows of one key with the same rank
+    * are ordered by the presentation columns, then by every other
+    * non-key column, by name, ascending, nulls last, so the winner
+    * does not depend on input order or partitioning (`keepFirst`'s
+    * total-order contract). */
   def mergeMegaMaf(existing: DataFrame, clinical: DataFrame,
                    variantKey: Seq[String],
                    significanceCol: String = "reported_significance")
   : DataFrame = {
     val merged = existing.unionByName(clinical, allowMissingColumns = true)
+    val presentation = Seq("Tumor_Sample_Barcode", "Chromosome", "Start_Position")
+    val rest = merged.columns
+      .filterNot(c => variantKey.contains(c) || presentation.contains(c)).sorted
     Dedup.preferReported(merged, variantKey, significanceCol,
-      tiebreak = Seq(col("Tumor_Sample_Barcode").asc,
-        col("Chromosome").asc, col("Start_Position").asc))
-      .orderBy("Tumor_Sample_Barcode", "Chromosome", "Start_Position")
+      tiebreak = presentation.map(col(_).asc) ++
+        rest.map(c => col(s"`${c.replace("`", "``")}`").asc_nulls_last))
+      .orderBy(presentation.map(col): _*)
   }
 }

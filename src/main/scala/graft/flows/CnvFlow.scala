@@ -3,7 +3,7 @@ package graft.flows
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.ColumnFns
-import graft.operators.{Dedup, IntervalJoin, Pivots, Reconcile}
+import graft.operators.{Dedup, IntervalJoin, Lineage, Pivots, Reconcile}
 import graft.sources.Readers
 
 /** CNV pipeline (SURVEY.md §3.1, workflows/cnv.py:487) as a pure
@@ -102,22 +102,26 @@ object CnvFlow {
       manifest)
 
   /** Whole flow from file inputs. `samples` drawn from the manifest
-    * (small, driver-side) as the explicit pivot column list. */
+    * (small, driver-side) as the explicit pivot column list. EAGER:
+    * the segments and the gene-level calls are materialized before
+    * this returns, and every output reads those snapshots, never the
+    * input files. `Outputs.segments` is not cached; there is nothing
+    * to unpersist. */
   def run(spark: SparkSession, cnvJsonPath: String, gtfPath: String,
           manifest: DataFrame): Outputs = {
-    import graft.operators.Reconcile
     val violations = Reconcile.constraintViolations(manifest,
       requiredCols = Seq("sample_id", "s3_url", "file_name", "md5sum"),
       uniqueCols = Seq("sample_id", "s3_url", "file_name", "md5sum"))
     require(violations.isEmpty, "manifest constraint violations")
 
-    // segments feed three outputs (SEG file, interval join, recon) —
-    // cache once instead of re-parsing the JSON per action (SURVEY §4
-    // "pipelining")
-    val segments = Readers.cnvSegments(spark, cnvJsonPath).cache()
+    // segments feed the SEG file, the interval join and the recon; the
+    // gene-level calls feed both matrices and the recon — each is
+    // computed once, here, so no output re-parses the JSON or re-runs
+    // the interval join (SURVEY §4 "pipelining")
+    val segments = Lineage.cut(Readers.cnvSegments(spark, cnvJsonPath))
     val genes = geneBed(Readers.gtf(spark, gtfPath))
     val segBed = segmentBed(segments)
-    val calls = geneLevelCalls(genes, segBed)
+    val calls = Lineage.cut(geneLevelCalls(genes, segBed))
     val samples = manifest.select("sample_id").distinct()
       .collect().map(_.getString(0)).sorted.toSeq
     val (log2, discrete) = matrices(calls, samples)

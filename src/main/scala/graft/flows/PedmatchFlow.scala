@@ -3,7 +3,7 @@ package graft.flows
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.ColumnFns
-import graft.operators.{Dedup, VariantOps}
+import graft.operators.{Lineage, VariantOps}
 
 /** Clinical VCF → somatic SNV / CNV / fusion extraction (SURVEY.md
   * §3.2, pedmatch-clinical-vcf-workflow.py:703).
@@ -136,20 +136,22 @@ object PedmatchFlow {
     * plans. Scales to any cohort size the cluster scales to.)
     *
     * `vcfDir` holds one single-sample VCF per manifest row; rows are
-    * tagged back to the manifest by file name. */
+    * tagged back to the manifest by file name. EAGER: the VCFs are
+    * scanned once, before this returns, into a PASS-filtered, tagged
+    * snapshot that `sv`, `cnvCalls` and `snvs` read. */
   def runAll(spark: SparkSession, manifest: DataFrame,
              vcfDir: String, orderCol: String = "POS"): Outputs = {
     import graft.sources.Readers
     val (paired, skipped) = pairPatients(manifest)
     val all = Readers.vcf(spark, vcfDir, Seq("SAMPLE"))
       .withColumn("file_name", ColumnFns.basename(input_file_name()))
-    val tagged = all.join(
+    // one VCF scan: the PASS rows, tagged with the manifest, are
+    // materialized once and the SV, CNV and SNV outputs all read them
+    val tagged = Lineage.cut(VariantOps.passOnly(all).join(
       paired.select("file_name", "participant_id", "sample_type", "sample_id"),
-      Seq("file_name"))
-    val tumor = VariantOps.passOnly(
-      tagged.filter(col("sample_type") === "tissue")).drop("sample_type")
-    val normal = VariantOps.passOnly(
-      tagged.filter(col("sample_type") === "blood")).drop("sample_type")
+      Seq("file_name")))
+    val tumor = tagged.filter(col("sample_type") === "tissue").drop("sample_type")
+    val normal = tagged.filter(col("sample_type") === "blood").drop("sample_type")
     val key = Seq("participant_id")
     Outputs(
       sv = toSv(fusions(tumor, normal, orderCol, key), col("sample_id")),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.annotate.{Annotate, Annotator}
 import graft.functions.ColumnFns
-import graft.operators.{Reconcile, VariantOps}
+import graft.operators.{Lineage, VariantOps}
 
 /** Bulk VCF → annotated MAF flow (SURVEY.md §3.3, vcf_anno.py:489):
   * per-file VCF frames → PASS filter → 4-col projection → chr strip →
@@ -46,7 +46,9 @@ object VcfAnnoFlow {
     * accounting pass. The reference's 500-file download batches and
     * 200-file annotation batches (vcf_anno.py:595,636) dissolve into
     * partitioning. Returns (annotated MAF, check report — rerun
-    * manifest = filter(needs_rerun)). */
+    * manifest = filter(needs_rerun)). EAGER: the annotated MAF is
+    * materialized before this returns; the check and every later
+    * read of the MAF use that snapshot. */
   def runAll(spark: SparkSession, manifest: DataFrame, vcfDir: String,
              annotator: Annotator): (DataFrame, DataFrame) = {
     import graft.sources.Readers
@@ -61,7 +63,9 @@ object VcfAnnoFlow {
         ColumnFns.endPosition(col("POS"), col("REF")))
     val barcodes = manifest.select(col("file_name").as("source_file"),
       col("sample"))
-    val maf = annotateAll(prepped, annotator, barcodes)
+    // annotated once: the check report describes exactly the MAF the
+    // caller writes and merges, and the annotator runs once per record
+    val maf = Lineage.cut(annotateAll(prepped, annotator, barcodes))
     (maf, concatMafCheck(manifest, maf))
   }
 

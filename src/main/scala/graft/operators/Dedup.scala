@@ -808,7 +808,7 @@ object Dedup {
     // caches built above — p, first, and clustersCore's final labels —
     // can all be released HERE instead of accumulating in executor
     // storage memory across a 245-query session.
-    val composed = cut(first
+    val composed = Lineage.cut(first
       .join(base.withColumnRenamed("id", "lbl"), Seq("lbl"), "left")
       .select(col("id"),
         coalesce(col("cluster_id"), col("lbl")).as("cluster_id")))
@@ -845,16 +845,6 @@ object Dedup {
     out.toDF("id", "cluster_id")
   }
 
-  /** Eager lineage cut for the iterative machinery: RELIABLE
-    * `checkpoint()` when the session has a checkpoint dir (cluster
-    * deployments — survives executor loss mid-loop), `localCheckpoint`
-    * otherwise (single-node: no replication or DFS round-trip; loss
-    * fails the deterministic job, which is re-run). */
-  private def cut(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint(eager = true)
-    else df.localCheckpoint(eager = true)
-
   /** Test/diagnostics hook: when non-null, called once per
     * clustersCore round with (round, per-round labels frame). The
     * cache-in-loop guard (DedupSpec) asserts the ANALYZED PLAN SIZE it
@@ -883,9 +873,9 @@ object Dedup {
     // per-round driver work is O(the round's own operators). Same
     // k-core discipline as Graph.kCore; blocks are reclaimed by
     // ContextCleaner when the reference drops (see dupClusters doc).
-    // `cut` = reliable checkpoint when a checkpoint dir is set (the
-    // cluster fault-tolerance knob documented on dupClusters).
-    val edges = cut(symEdges
+    // `Lineage.cut` = reliable checkpoint when a checkpoint dir is set
+    // (the cluster fault-tolerance knob documented on dupClusters).
+    val edges = Lineage.cut(symEdges
       .union(symEdges.select(col("dst").as("src"), col("src").as("dst"))))
     // Adaptive local solve: each distributed round costs several
     // scheduled stages regardless of data volume, so on a graph whose
@@ -933,13 +923,13 @@ object Dedup {
           least(col("cluster_id"), coalesce(col("__parent"), col("cluster_id")))
             .as("cluster_id"),
           col("__old"))
-      // `cut` both materializes and truncates lineage; on
+      // `Lineage.cut` both materializes and truncates lineage; on
       // non-checkpoint rounds a plain cache() suffices — the cached
       // plan chains back at most checkpointEvery rounds to a cut leaf,
       // so per-round driver analysis stays O(checkpointEvery), pinned
       // by the roundProbe guard test
       val next =
-        if ((i + 1) % checkpointEvery == 0) cut(jumped)
+        if ((i + 1) % checkpointEvery == 0) Lineage.cut(jumped)
         else jumped.cache()
       val probe = roundProbe
       if (probe != null) probe(i, next)

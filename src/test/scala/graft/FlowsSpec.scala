@@ -2,8 +2,8 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.annotate.MockAnnotator
-import graft.flows.{CnvFlow, VcfAnnoFlow}
+import graft.annotate.{Annotator, MockAnnotator}
+import graft.flows.{ClinicalMergeFlow, CnvFlow, VcfAnnoFlow}
 import graft.sources.{Readers, Writers}
 
 class FlowsSpec extends SparkSpec {
@@ -13,10 +13,12 @@ class FlowsSpec extends SparkSpec {
     val p = dir.resolve(name); Files.writeString(p, s); p.toString
   }
 
-  test("CnvFlow end-to-end on a hand-checked fixture") {
-    val dir = Files.createTempDirectory("cnvflow")
-    // two samples, one doc each; sample2's segment only 40% covers the
-    // gene (dropped by -f 0.5), sample1's fully covers it
+  /** Two samples, one doc each; sample2's segment only 40% covers a
+    * gene at chr1 [2001,3000] (dropped by -f 0.5), sample1's fully
+    * covers it. Returns (dir, json dir, gtf path, manifest). */
+  private def cnvFixture(name: String, gtfText: String)
+  : (java.nio.file.Path, String, String, org.apache.spark.sql.DataFrame) = {
+    val dir = Files.createTempDirectory(name)
     val doc1 =
       """{"metadata": {"sample_name": "PT1-S1"}, "segments": [
         |  {"position": {"chrom": "chr1", "start": 1000, "end": 5000, "length": 4000},
@@ -34,18 +36,25 @@ class FlowsSpec extends SparkSpec {
     val jsonDir = dir.resolve("json"); Files.createDirectories(jsonDir)
     write(jsonDir, "s1.json", doc1)
     write(jsonDir, "s2.json", doc2)
-    // gene on chr1 [2001,3000] 1-based → len 1000; PT2 overlap 300 < 500
-    val gtf = write(dir, "g.gtf",
-      """chr1	HAVANA	gene	2001	3000	.	+	.	gene_id "E1"; gene_type "protein_coding"; gene_name "TP53";
-        |chr1	HAVANA	gene	2001	3000	.	+	.	gene_id "E2"; gene_type "protein_coding"; gene_name "ZZZ"; tag "readthrough_gene";
-        |chrM	x	gene	1	100	.	+	.	gene_id "E3"; gene_type "protein_coding"; gene_name "MT1";
-        |""".stripMargin)
     val manifest = Seq(
       ("PT1-S1", "s3://b/s1.json", "s1.json", "m1", 10L),
       ("PT2-S2", "s3://b/s2.json", "s2.json", "m2", 11L))
       .toDF("sample_id", "s3_url", "file_name", "md5sum", "file_size")
+    (dir, jsonDir.toString, write(dir, "g.gtf", gtfText), manifest)
+  }
 
-    val out = CnvFlow.run(spark, jsonDir.toString, gtf, manifest)
+  private val tp53Gtf =
+    "chr1\tHAVANA\tgene\t2001\t3000\t.\t+\t.\tgene_id \"E1\"; gene_type \"protein_coding\"; gene_name \"TP53\";\n"
+
+  test("CnvFlow end-to-end on a hand-checked fixture") {
+    // gene on chr1 [2001,3000] 1-based → len 1000; PT2 overlap 300 < 500
+    val (dir, jsonDir, gtf, manifest) = cnvFixture("cnvflow",
+      """chr1	HAVANA	gene	2001	3000	.	+	.	gene_id "E1"; gene_type "protein_coding"; gene_name "TP53";
+        |chr1	HAVANA	gene	2001	3000	.	+	.	gene_id "E2"; gene_type "protein_coding"; gene_name "ZZZ"; tag "readthrough_gene";
+        |chrM	x	gene	1	100	.	+	.	gene_id "E3"; gene_type "protein_coding"; gene_name "MT1";
+        |""".stripMargin)
+
+    val out = CnvFlow.run(spark, jsonDir, gtf, manifest)
     assert(out.segments.count() == 2)
     // only PT1's segment meets -f 0.5 on the single surviving gene
     val log2 = out.log2Matrix.collect()
@@ -68,31 +77,8 @@ class FlowsSpec extends SparkSpec {
     // exact BYTES of the three file products (SURVEY §5 item 2):
     // header order, tab separation, chr-strip, NA/0 null rendering,
     // int-vs-float formatting
-    val dir = Files.createTempDirectory("cnvflow-golden")
-    val doc1 =
-      """{"metadata": {"sample_name": "PT1-S1"}, "segments": [
-        |  {"position": {"chrom": "chr1", "start": 1000, "end": 5000, "length": 4000},
-        |   "cnv": {"log2_copy_ratio": 1.5, "cnv_supporting_points": 10,
-        |           "cnv_supporting_reads": 30, "log2_pval": 0.01,
-        |           "log2_copy_ratio_90per_ci_low": 1.0,
-        |           "log2_copy_ratio_90per_ci_high": 2.0}}]}""".stripMargin
-    val doc2 =
-      """{"metadata": {"sample_name": "PT2-S2"}, "segments": [
-        |  {"position": {"chrom": "chr1", "start": 2600, "end": 2900, "length": 300},
-        |   "cnv": {"log2_copy_ratio": -1.2, "cnv_supporting_points": 5,
-        |           "cnv_supporting_reads": 12, "log2_pval": 0.05,
-        |           "log2_copy_ratio_90per_ci_low": -1.6,
-        |           "log2_copy_ratio_90per_ci_high": -0.8}}]}""".stripMargin
-    val jsonDir = dir.resolve("json"); Files.createDirectories(jsonDir)
-    write(jsonDir, "s1.json", doc1)
-    write(jsonDir, "s2.json", doc2)
-    val gtf = write(dir, "g.gtf",
-      "chr1\tHAVANA\tgene\t2001\t3000\t.\t+\t.\tgene_id \"E1\"; gene_type \"protein_coding\"; gene_name \"TP53\";\n")
-    val manifest = Seq(
-      ("PT1-S1", "s3://b/s1.json", "s1.json", "m1", 10L),
-      ("PT2-S2", "s3://b/s2.json", "s2.json", "m2", 11L))
-      .toDF("sample_id", "s3_url", "file_name", "md5sum", "file_size")
-    val out = CnvFlow.run(spark, jsonDir.toString, gtf, manifest)
+    val (dir, jsonDir, gtf, manifest) = cnvFixture("cnvflow-golden", tp53Gtf)
+    val out = CnvFlow.run(spark, jsonDir, gtf, manifest)
 
     def readBack(path: String): String = {
       val part = new java.io.File(path).listFiles()
@@ -133,7 +119,23 @@ class FlowsSpec extends SparkSpec {
     }
   }
 
-  test("VcfAnnoFlow.runAll: tagged scan -> annotate -> check, no per-file loop") {
+  test("CnvFlow.run: outputs read the materialized cut, nothing is cached") {
+    val (_, jsonDir, gtf, manifest) = cnvFixture("cnvflow-cut", tp53Gtf)
+    spark.catalog.clearCache()
+    val out = CnvFlow.run(spark, jsonDir, gtf, manifest)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    Seq("seg" -> out.seg, "log2Matrix" -> out.log2Matrix,
+      "discreteMatrix" -> out.discreteMatrix,
+      "reconciliation" -> out.reconciliation).foreach { case (name, df) =>
+      assert(!readsFiles(df), s"$name re-reads the input files")
+    }
+    out.segments.unpersist() // harmless: nothing was cached
+    assert(out.log2Matrix.count() == 1)
+  }
+
+  /** a.vcf: one PASS + one lowq record; b.vcf: one PASS record; the
+    * manifest also lists c.vcf, which was never produced. */
+  private def vcfAnnoFixture(): (String, org.apache.spark.sql.DataFrame) = {
     val dir = Files.createTempDirectory("vcfanno_all")
     val vcfDir = dir.resolve("vcf"); Files.createDirectories(vcfDir)
     def vcfFile(name: String, rows: Seq[String]): Unit =
@@ -150,8 +152,13 @@ class FlowsSpec extends SparkSpec {
       ("a.vcf", "TCGA-01", 1L), ("b.vcf", "TCGA-02", 1L),
       ("c.vcf", "TCGA-03", 3L)) // never produced -> rerun
       .toDF("file_name", "sample", "expected_variants")
+    (vcfDir.toString, manifest)
+  }
+
+  test("VcfAnnoFlow.runAll: tagged scan -> annotate -> check, no per-file loop") {
+    val (vcfDir, manifest) = vcfAnnoFixture()
     val (maf, check) = VcfAnnoFlow.runAll(spark, manifest,
-      vcfDir.toString, new MockAnnotator)
+      vcfDir, new MockAnnotator)
     val rows = maf.select("CHROM", "End_Position", "Tumor_Sample_Barcode",
       "Annotation_Status").as[(String, Long, String, String)].collect().toSet
     assert(rows == Set(
@@ -160,6 +167,24 @@ class FlowsSpec extends SparkSpec {
     val rerun = check.filter($"needs_rerun")
       .select("file_name").as[String].collect().toSet
     assert(rerun == Set("c.vcf"))
+  }
+
+  test("VcfAnnoFlow.runAll: the annotator runs once per PASS record") {
+    val (vcfDir, manifest) = vcfAnnoFixture()
+    val calls = spark.sparkContext.longAccumulator("annotate.calls")
+    val (maf, check) = VcfAnnoFlow.runAll(spark, manifest, vcfDir,
+      new FlowsSpec.CallCounting(new MockAnnotator, calls))
+    check.collect()
+    maf.collect()
+    val mafOut = maf.select($"Tumor_Sample_Barcode", $"CHROM".as("Chromosome"),
+      $"Start_Position", $"REF".as("Reference_Allele"),
+      $"ALT".as("Tumor_Seq_Allele2"),
+      lit(null).cast("string").as("reported_significance"))
+    val merged = ClinicalMergeFlow.mergeMegaMaf(mafOut, mafOut,
+      Seq("Tumor_Sample_Barcode", "Chromosome", "Start_Position",
+        "Reference_Allele", "Tumor_Seq_Allele2"))
+    assert(merged.count() == 2)
+    assert(calls.value == 2L) // two PASS records, one call each
   }
 
   test("VcfAnnoFlow: prep → mock annotate → concat → check") {
@@ -193,5 +218,21 @@ class FlowsSpec extends SparkSpec {
     val rerun = check.filter($"needs_rerun")
       .select("file_name").as[String].collect().toSet
     assert(rerun == Set("c.vcf")) // a/b reconciled; c produced nothing
+  }
+}
+
+object FlowsSpec {
+  /** Counts every annotate call into a Spark accumulator, then defers
+    * to the wrapped annotator. */
+  final class CallCounting(inner: Annotator,
+                           calls: org.apache.spark.util.LongAccumulator)
+      extends Annotator {
+    def annotate(chrom: String, pos: Long, ref: String, alt: String)
+    : (String, String, String) = {
+      calls.add(1)
+      inner.annotate(chrom, pos, ref, alt)
+    }
+    override def open(): Unit = inner.open()
+    override def close(): Unit = inner.close()
   }
 }

@@ -130,6 +130,25 @@ class PedmatchFlowSpec extends SparkSpec {
     assert(got == Seq("clinical", "clinical"))
   }
 
+  test("mergeMegaMaf: a same-rank tie has one stated winner under any order") {
+    val cols = Seq("Tumor_Sample_Barcode", "Chromosome", "Start_Position",
+      "Reference_Allele", "Tumor_Seq_Allele2", "Hugo_Symbol",
+      "reported_significance", "source")
+    // both rows of the key are reported (rank 0); the tiebreak after the
+    // key is Hugo_Symbol ascending, so BRAF wins over KRAS
+    val a = Seq(("b1", "7", 100L, "A", "T", "KRAS", "Pathogenic", "mega"))
+      .toDF(cols: _*)
+    val b = Seq(("b1", "7", 100L, "A", "T", "BRAF", "Pathogenic", "clinical"))
+      .toDF(cols: _*)
+    val key = cols.take(5)
+    for ((existing, clinical) <- Seq(a -> b, b -> a); n <- Seq(1, 4)) {
+      val got = ClinicalMergeFlow.mergeMegaMaf(
+          existing.repartition(n), clinical.repartition(n), key)
+        .select("Hugo_Symbol", "source").as[(String, String)].collect().toSeq
+      assert(got == Seq(("BRAF", "clinical")), s"partitions=$n")
+    }
+  }
+
   test("extractAnnotations: full F16 cascade (mci:99-142)") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
@@ -236,7 +255,9 @@ class PedmatchFlowSpec extends SparkSpec {
     assert(got == Set("p.Short_BRAF", "p.Short_KRAS", "old_keeper"))
   }
 
-  test("runAll: whole cohort in one DAG, germline subtraction stays per-patient") {
+  /** Three participants: P1 somatic (fusion, snv, amp), P2 the same
+    * events but germline, P3 tissue only. Returns (vcf dir, manifest). */
+  private def cohortFixture(): (String, org.apache.spark.sql.DataFrame) = {
     val dir = java.nio.file.Files.createTempDirectory("pedmatch_all")
     val vcfDir = dir.resolve("vcf"); java.nio.file.Files.createDirectories(vcfDir)
     def vcfFile(name: String, rows: Seq[String]): Unit =
@@ -275,8 +296,12 @@ class PedmatchFlowSpec extends SparkSpec {
       ("P3-T", "s3://b/p3_t.vcf", "p3_t.vcf", "m5", 1L, "P3", "tissue"))
       .toDF("sample_id", "s3_url", "file_name", "md5sum", "file_size",
         "participant_id", "sample_type")
+    (vcfDir.toString, manifest)
+  }
 
-    val out = PedmatchFlow.runAll(spark, manifest, vcfDir.toString)
+  test("runAll: whole cohort in one DAG, germline subtraction stays per-patient") {
+    val (vcfDir, manifest) = cohortFixture()
+    val out = PedmatchFlow.runAll(spark, manifest, vcfDir)
     // fusion somatic ONLY for P1 — P2's germline copy must not erase
     // P1's (per-patient keying) and must itself be dropped
     val sv = out.sv.select("Sample_Id", "Site1_Hugo_Symbol",
@@ -290,6 +315,16 @@ class PedmatchFlowSpec extends SparkSpec {
     assert(snvGot == Set(("P1", 100L, "0/1", "0/0")))
     assert(out.skipped.select("participant_id").as[String].collect().toSeq
       == Seq("P3"))
+  }
+
+  test("runAll: the SV, CNV and SNV outputs read the cut, not the VCFs") {
+    val (vcfDir, manifest) = cohortFixture()
+    val out = PedmatchFlow.runAll(spark, manifest, vcfDir)
+    Seq("sv" -> out.sv, "cnvCalls" -> out.cnvCalls, "snvs" -> out.snvs)
+      .foreach { case (name, df) =>
+        assert(!readsFiles(df), s"$name re-reads the VCFs")
+      }
+    assert(out.snvs.count() == 1)
   }
 
   test("DbCounter.reconcile flags mismatches") {

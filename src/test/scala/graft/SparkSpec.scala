@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -10,6 +12,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   import scala.language.implicitConversions
   implicit def sparkImplicits: SparkSession = spark
+
+  /** Whether computing `df` would read a data source: a relation in the
+    * optimized plan or a file scan in the physical plan. */
+  def readsFiles(df: DataFrame): Boolean = {
+    val qe = df.queryExecution
+    qe.optimizedPlan.collectWithSubqueries { case r: LogicalRelation => r }.nonEmpty ||
+      qe.sparkPlan.collectWithSubqueries { case s: FileSourceScanExec => s }.nonEmpty
+  }
 }
 
 object SparkSpec {
